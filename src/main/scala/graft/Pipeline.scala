@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.{Intermediate, Marts, Staging}
 import graft.quality.Checks
+import graft.util.Parallel
 import graft.write.IncrementalWriter
 
 /** In-process DAG runner — replaces the reference's Airflow + dbt `ref()`
@@ -16,6 +17,21 @@ import graft.write.IncrementalWriter
   * tables). `fct_trips` is cached before the two aggregate marts since
   * both consume it (the reference materializes it as a table for the same
   * reason).
+  *
+  * [[run]] runs each group of independent steps concurrently on driver
+  * threads ([[graft.util.Parallel]]), as the reference runs its dbt DAG
+  * with 4 threads: at these sizes a step is mostly per-job overhead, so
+  * steps that wait on each other for no reason add up. The groups:
+  *  - the four per-feed staging writes (`incrementalCut` +
+  *    `deleteInsert`): each reads only its own raw table and writes only
+  *    its own staging path, and the writers set dynamic partition
+  *    overwrite per write, never on the shared session;
+  *  - the `fct_trips_daily` and `fct_trips_monthly` writes: distinct
+  *    output paths, started only after the `fct_trips` write has filled
+  *    the cache both read;
+  *  - the check aggregates, one per model ([[Checks.failed]]): read-only.
+  * A failing step fails the run with its own exception once the steps
+  * already running in its group have finished.
   */
 object Pipeline {
 
@@ -48,21 +64,17 @@ object Pipeline {
   /** Full run with storage: staging incremental write, marts CTAS rebuild,
     * then the 37 quality checks. Returns the failed check names. */
   def run(spark: SparkSession, layout: Layout): Seq[String] = {
-    val feeds = Seq("yellow", "green", "fhv", "fhvhv")
-    val raws = feeds.map(f => spark.read.parquet(layout.raw(f)))
+    val feeds = Seq[(String, DataFrame => DataFrame)](
+      "yellow" -> Staging.yellow, "green" -> Staging.green,
+      "fhv" -> Staging.fhv, "fhvhv" -> Staging.fhvhv)
 
     // staging: incremental cut + delete+insert per feed (S10/P3)
-    val staged = feeds.zip(raws).map { case (feed, raw) =>
-      val transform: DataFrame => DataFrame = feed match {
-        case "yellow" => Staging.yellow
-        case "green"  => Staging.green
-        case "fhv"    => Staging.fhv
-        case "fhvhv"  => Staging.fhvhv
-      }
+    val staged = Parallel.all(feeds.map { case (feed, transform) => () =>
+      val raw = spark.read.parquet(layout.raw(feed))
       val cut = IncrementalWriter.incrementalCut(spark, raw, layout.staging(feed))
       IncrementalWriter.deleteInsert(spark, transform(cut), layout.staging(feed), "trip_id")
       spark.read.parquet(layout.staging(feed))
-    }
+    })
 
     val uni = Intermediate.unify(staged(0), staged(1), staged(2), staged(3))
     val enr = Intermediate.enrich(uni)
@@ -70,13 +82,13 @@ object Pipeline {
     val fct = Marts.fctTrips(cln).cache()
     try {
       IncrementalWriter.overwriteTable(fct, layout.mart("fct_trips"))
-      IncrementalWriter.overwriteTable(Marts.fctTripsDaily(fct), layout.mart("fct_trips_daily"))
-      IncrementalWriter.overwriteTable(Marts.fctTripsMonthly(fct), layout.mart("fct_trips_monthly"))
+      Parallel.all(Seq(
+        () => IncrementalWriter.overwriteTable(Marts.fctTripsDaily(fct), layout.mart("fct_trips_daily")),
+        () => IncrementalWriter.overwriteTable(Marts.fctTripsMonthly(fct), layout.mart("fct_trips_monthly"))))
 
       val daily = spark.read.parquet(layout.mart("fct_trips_daily"))
       val monthly = spark.read.parquet(layout.mart("fct_trips_monthly"))
-      Checks.all(staged(0), uni, enr, cln, fct, daily, monthly)
-        .filterNot(_.passed).map(_.name)
+      Checks.failed(Checks.all(staged(0), uni, enr, cln, fct, daily, monthly))
     } finally fct.unpersist()
   }
 }

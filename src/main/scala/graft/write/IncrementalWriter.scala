@@ -190,16 +190,15 @@ object IncrementalWriter {
     byPartition(df).write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(path)
 
   /** Dynamic partition overwrite: replaces exactly the (year, month)
-    * partitions present in `df`. */
-  def overwritePartitions(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try byPartition(df).write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+    * partitions present in `df`. The mode is a per-write option, never
+    * the session-wide `spark.sql.sources.partitionOverwriteMode`: setting
+    * and restoring the shared conf around the write would let an
+    * overlapping writer's restore turn this write into a static
+    * overwrite, which truncates every partition the batch does not
+    * carry. */
+  def overwritePartitions(spark: SparkSession, df: DataFrame, path: String): Unit =
+    byPartition(df).write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*).parquet(path)
 
   /** S5: partition existence probe (`ingest_spark_bulk.py:59-68`) —
     * partition-pruned count, cheap because the predicate prunes to one

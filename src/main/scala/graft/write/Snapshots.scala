@@ -3447,7 +3447,8 @@ object SnapshotTable {
     * copy), then the files copy on a bounded thread pool: local disks
     * and object stores both serve concurrent streams far better than
     * one at a time. Same tree, same bytes, ~min(16, files)× less
-    * wall-clock. First failure cancels the pool and rethrows. */
+    * wall-clock. The first failure skips the copies not yet started and
+    * is rethrown once the running ones finish. */
   private[graft] def copyTreeParallel(srcFs: FileSystem, src: Path,
                                       dstFs: FileSystem, dst: Path,
                                       conf: org.apache.hadoop.conf.Configuration): Unit = {
@@ -3468,27 +3469,12 @@ object SnapshotTable {
     // parquet file. 1 MB turns each file into a couple of syscalls.
     val copyConf = new org.apache.hadoop.conf.Configuration(conf)
     copyConf.setInt("io.file.buffer.size", 1024 * 1024)
-    val threads = math.min(16, files.size)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    try {
-      val futures = files.map { f =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            require(org.apache.hadoop.fs.FileUtil.copy(
-              srcFs, f, dstFs, new Path(dst, rel(f)),
-              /*deleteSource=*/ false, copyConf),
-              s"deep clone copy failed: $f")
-            ()
-          }
-        })
-      }
-      futures.foreach(_.get())
-    } catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    } finally {
-      pool.shutdownNow()
-      ()
-    }
+    graft.util.Parallel.all(files.toSeq.map { f => () =>
+      require(org.apache.hadoop.fs.FileUtil.copy(
+        srcFs, f, dstFs, new Path(dst, rel(f)),
+        /*deleteSource=*/ false, copyConf),
+        s"deep clone copy failed: $f")
+    }, threads = math.min(16, files.size))
   }
 
   /** One ordered WHEN clause of [[SnapshotTable.commitMergeGeneral]] —

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.{Intermediate, Marts, Staging}
@@ -130,6 +133,168 @@ class PipelineSpec extends AnyFunSuite {
     // the DAG edge set mirrors buildModels wiring arity: 4 raw→stg, 4
     // stg→unified, 3 chain edges, fct→daily+monthly = 13 edges
     assert(graft.tools.Lineage.edges.flatMap(_._2).size == 13)
+  }
+
+  test("overwritePartitions is dynamic per write: static session conf keeps untouched partitions and is left as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val path = Files.createTempDirectory("graft_dyn_ow").toString + "/t"
+    IncrementalWriter.appendPartitioned(sy, path)
+    val months = sy.select("month").distinct().as[Int].collect().sorted
+    assert(months.length >= 2, "fixture precondition: two months")
+    val (untouched, touched) = (months.head, months.last)
+    def filesOf(m: Int): Set[String] =
+      Option(new java.io.File(s"$path/year=2024/month=$m").listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val before = filesOf(untouched)
+    assert(before.nonEmpty)
+    spark.conf.set(key, "static")
+    try {
+      IncrementalWriter.overwritePartitions(spark, sy.filter($"month" === touched), path)
+      assert(filesOf(untouched) == before, "a static overwrite truncated an untouched partition")
+      assert(spark.conf.get(key) == "static")
+    } finally spark.conf.unset(key)
+    assert(spark.read.parquet(path).count() == sy.count())
+  }
+
+  private val feeds = Seq("yellow", "green", "fhv", "fhvhv")
+
+  private def rawFixture(feed: String): DataFrame = feed match {
+    case "yellow" => TaxiFixturesData.rawYellow(spark)
+    case "green" => TaxiFixturesData.rawGreen(spark)
+    case "fhv" => TaxiFixturesData.rawFhv(spark)
+    case "fhvhv" => TaxiFixturesData.rawFhvhv(spark)
+  }
+
+  /** A warehouse whose raw tables hold the fixture feeds. */
+  private def landedLayout(name: String,
+                           raw: String => DataFrame = rawFixture): Pipeline.Layout = {
+    val layout = Pipeline.Layout(Files.createTempDirectory(name).toString)
+    feeds.foreach(f => IncrementalWriter.appendPartitioned(raw(f), layout.raw(f)))
+    layout
+  }
+
+  private def sameRows(got: DataFrame, want: DataFrame): Boolean = {
+    val stamps = Seq("loaded_at", "created_at")
+    val w = want.drop(stamps: _*)
+    val g = got.select(w.columns.map(col).toIndexedSeq: _*)
+    g.exceptAll(w).isEmpty && w.exceptAll(g).isEmpty
+  }
+
+  test("Pipeline.run: cold run and rerun return the per-check verdicts and write buildModels' marts") {
+    val layout = landedLayout("graft_run")
+    val raws = feeds.map(f => spark.read.parquet(layout.raw(f)))
+    val b = Pipeline.buildModels(raws(0), raws(1), raws(2), raws(3))
+    val expected = Checks.all(b.stgYellow, b.unified, b.enriched, b.cleaned,
+      b.fctTrips, b.fctDaily, b.fctMonthly).filterNot(_.violations.isEmpty).map(_.name)
+    def stagingCounts = feeds.map(f => spark.read.parquet(layout.staging(f)).count())
+    def martsMatch(): Unit = Seq(
+      "fct_trips" -> b.fctTrips, "fct_trips_daily" -> b.fctDaily,
+      "fct_trips_monthly" -> b.fctMonthly).foreach { case (m, want) =>
+      assert(sameRows(spark.read.parquet(layout.mart(m)), want), s"mart $m differs from buildModels")
+    }
+
+    assert(Pipeline.run(spark, layout) == expected)
+    martsMatch()
+    val cold = stagingCounts
+    assert(cold == Seq(b.stgYellow, b.stgGreen, b.stgFhv, b.stgFhvhv).map(_.count()))
+
+    // the rerun re-stages the latest month of every feed at once: the
+    // concurrent delete+inserts must leave each staging table as it was
+    assert(Pipeline.run(spark, layout) == expected)
+    assert(stagingCounts == cold)
+    martsMatch()
+  }
+
+  test("Pipeline.run rethrows a staging worker's own exception and leaves no pool thread") {
+    val layout = landedLayout("graft_run_fail", {
+      case "green" => TaxiFixturesData.rawGreen(spark).drop("lpep_dropoff_datetime")
+      case f => rawFixture(f)
+    })
+    val e = intercept[AnalysisException](Pipeline.run(spark, layout))
+    assert(e.getMessage.contains("dropoff_datetime"))
+    val live = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-parallel-") && t.isAlive)
+    assert(live.isEmpty, s"pool threads left running: ${live.map(_.getName)}")
+  }
+
+  // ---- Checks.failed (one aggregate per model) against the per-check frames ----
+
+  private lazy val daily = Marts.fctTripsDaily(fct)
+  private lazy val monthly = Marts.fctTripsMonthly(fct)
+
+  private final case class Models(sy: DataFrame, uni: DataFrame, enr: DataFrame,
+                                  cln: DataFrame, fct: DataFrame, daily: DataFrame,
+                                  monthly: DataFrame) {
+    def checks: Seq[Checks.Check] = Checks.all(sy, uni, enr, cln, fct, daily, monthly)
+  }
+  private lazy val base = Models(sy, uni, enr, cln, fct, daily, monthly)
+
+  /** `column` set to `value` on the rows `where` selects. */
+  private def set(df: DataFrame, column: String, value: Column, where: Column): DataFrame =
+    df.withColumn(column,
+      when(where, value.cast(df.schema(column).dataType)).otherwise(col(column)))
+
+  /** `column` set to `value` on the row(s) of the smallest trip_id. */
+  private def setOnOneTrip(df: DataFrame, column: String, value: Column): DataFrame =
+    set(df, column, value,
+      col("trip_id") === df.select(min("trip_id")).head().getString(0))
+
+  /** `rows` copies of one fct_trips row with a positive total, the first
+    * `bad` of them with a negative fare. */
+  private def fctWithBadFares(rows: Int, bad: Int): DataFrame = {
+    val one = spark.createDataFrame(java.util.List.of(fct.head()), fct.schema)
+    one.crossJoin(spark.range(rows).withColumnRenamed("id", "_i"))
+      .withColumn("fare_amount", when(col("_i") < bad, -1.0).otherwise(10.0))
+      .withColumn("total_amount", lit(12.0))
+      .drop("_i")
+  }
+
+  test("Checks.failed agrees with violations.isEmpty on every check, for every check kind") {
+    val cases: Seq[(String, Models, Seq[String])] = Seq(
+      ("fixture", base, Nil),
+      ("not_null", base.copy(sy = setOnOneTrip(sy, "dropoff_location_id", lit(null))),
+        Seq("stg_yellow.dropoff_location_id.not_null")),
+      ("accepted_values", base.copy(uni = setOnOneTrip(uni, "taxi_type", lit("bus"))),
+        Seq("int_unified.taxi_type.accepted_values")),
+      ("accepted_values passes NULL", base.copy(uni = setOnOneTrip(uni, "taxi_type", lit(null))),
+        Seq("int_unified.taxi_type.not_null")),
+      ("accepted_range below min", base.copy(daily = set(daily, "total_trips", lit(-1),
+        col("taxi_type") === "yellow")),
+        Seq("fct_daily.total_trips.accepted_range_min0")),
+      ("accepted_range above max", base.copy(enr = setOnOneTrip(enr, "pickup_hour", lit(24))),
+        Seq("int_enriched.pickup_hour.accepted_range_0_23")),
+      ("accepted_range passes NULL", base.copy(enr = setOnOneTrip(enr, "pickup_hour", lit(null))),
+        Nil),
+      ("assert_valid_speed", base.copy(fct = setOnOneTrip(fct, "avg_speed_mph", lit(150.0))),
+        Seq("assert_valid_speed")),
+      ("assert_positive_fare at exactly 5%", base.copy(fct = fctWithBadFares(20, 1)), Nil),
+      ("assert_positive_fare just above 5%", base.copy(fct = fctWithBadFares(19, 1)),
+        Seq("assert_positive_fare")))
+    cases.foreach { case (label, models, want) =>
+      val checks = models.checks
+      assert(checks.size == 37)
+      val byFrame = checks.filterNot(_.violations.isEmpty).map(_.name)
+      assert(byFrame == want, s"$label: the mutation did not fail exactly $want")
+      assert(Checks.failed(checks) == byFrame, s"$label: fused verdicts differ")
+    }
+  }
+
+  test("Checks.failed over an empty fct_trips fails as the per-check frames do") {
+    // 0 problem rows of 0 is 0 * 100.0 / 0: under ANSI arithmetic the
+    // positive-fare percentage divides by zero, so both ways of running
+    // the checks throw the same error instead of passing
+    val empty = fct.filter(col("trip_id") === "no such trip")
+    val checks = base.copy(fct = empty, daily = Marts.fctTripsDaily(empty),
+      monthly = Marts.fctTripsMonthly(empty)).checks
+    def divideByZero(r: Try[Seq[String]]): Boolean = r match {
+      case Failure(e: ArithmeticException with org.apache.spark.SparkThrowable) =>
+        e.getCondition == "DIVIDE_BY_ZERO"
+      case _ => false
+    }
+    val byFrame = Try(checks.filterNot(_.violations.isEmpty).map(_.name))
+    assert(divideByZero(byFrame), s"per-check frames: $byFrame")
+    val fused = Try(Checks.failed(checks))
+    assert(divideByZero(fused), s"Checks.failed: $fused")
   }
 
   test("incremental delete+insert is idempotent and replaces matched keys") {
